@@ -16,9 +16,11 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * the whole envelope, encryption.rs:243-272, not just the body), so
   * the result is a struct<headers, body> the read plan projects back
   * into the logical record columns. The key rides along as a
-  * reference object so the call sits inside whole-stage codegen —
-  * read-side decryption is a plan column, never a driver loop (the
-  * reference decrypts in its session loop, read.rs:74-91).
+  * reference object so the call sits inside whole-stage codegen. The
+  * per-record work is EnvelopeCodec.decryptRecord, which the serving
+  * reads (StreamStore.readBatch) call directly on the driver — the
+  * analog of the reference decrypting in its session loop,
+  * read.rs:74-91.
   *
   * The AAD is an EXPRESSION child, not a constant: a single-stream
   * read binds it to a literal, while a basin-wide decrypting scan

@@ -26,6 +26,11 @@ import org.apache.parquet.schema.MessageTypeParser
   *
   * Bulk ingest (StreamStore.ingest) still goes through Spark — that is
   * the distributed path; this is the low-latency one.
+  *
+  * The read side mirrors this: FileIndex opens every data file through
+  * NIO (`LocalInputFile`) with read options built on one shared
+  * Configuration, so a serving read (StreamStore.readBatch) is pure
+  * I/O on the driver too, with no Spark job and no Hadoop filesystem.
   */
 object DirectParquet {
 

@@ -143,16 +143,25 @@ object EnvelopeCodec {
     */
   val decryptCalls = new java.util.concurrent.atomic.LongAdder
 
-  /** Decrypt one stored encrypted-envelope record and decode it to the
-    * Spark struct row (headers, body) — static-shaped so the codegen'd
-    * read-plan expression calls it directly (one decrypt + decode per
-    * record, executor-side).
+  /** Decrypt one stored encrypted-envelope record and decode it to
+    * (headers, body) — the one decrypt both read executors call: the
+    * record_decrypt plan expression (through [[decryptToRow]]) and
+    * the driver-side scan behind StreamStore.readBatch. Counted in
+    * [[decryptCalls]].
+    */
+  def decryptRecord(key: Array[Byte], aad: Array[Byte], enc: Array[Byte])
+      : (Seq[(Array[Byte], Array[Byte])], Array[Byte]) = {
+    decryptCalls.increment()
+    decode(RecordCipher.decrypt(key, aad, enc))
+  }
+
+  /** [[decryptRecord]] as the Spark struct row (headers, body) —
+    * static-shaped so the codegen'd read-plan expression calls it
+    * directly (one decrypt + decode per record, executor-side).
     */
   def decryptToRow(key: Array[Byte], aad: Array[Byte],
                    enc: Array[Byte]): InternalRow = {
-    decryptCalls.increment()
-    val plain = RecordCipher.decrypt(key, aad, enc)
-    val (headers, body) = decode(plain)
+    val (headers, body) = decryptRecord(key, aad, enc)
     val arr = new Array[Any](headers.size)
     var i = 0
     headers.foreach { case (n, v) =>

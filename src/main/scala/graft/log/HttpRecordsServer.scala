@@ -142,10 +142,11 @@ object HttpRecordsServer {
     s"""{"code":"$code","message":"${jsonEsc(message)}"}"""
 
   /** True iff the failure is an AEAD auth failure (wrong key / corrupt
-    * record) anywhere in the cause/suppressed graph — plan-level
-    * decryption surfaces it wrapped in Spark's task-failure
-    * exceptions, which preserve causes (and park secondary failures
-    * in suppressed). The check is by exception TYPE, never message
+    * record) anywhere in the cause/suppressed graph — serving reads
+    * (StreamStore.readBatch, on the driver) throw it bare, while
+    * plan-level decryption (StreamStore.read) surfaces it wrapped in
+    * Spark's task-failure exceptions, which preserve causes (and park
+    * secondary failures in suppressed). The check is by exception TYPE, never message
     * text — an unrelated error merely mentioning the class name must
     * not read as a key failure. Maps to the reference's
     * `decryption_failed` error (records.rs wrong-key test: 400 +
@@ -353,6 +354,11 @@ object HttpRecordsServer {
         catch { case _: Throwable => ex.close() }
       case Invalid(m) =>
         try respond(ex, 422, errJson("invalid", m).getBytes(UTF_8))
+        catch { case _: Throwable => ex.close() }
+      // a wrong key found before a session's stream opens (a
+      // timestamp start decrypts its probe record)
+      case t: Throwable if decryptionFailure(t) =>
+        try respond(ex, 400, DecryptionFailedBody.getBytes(UTF_8))
         catch { case _: Throwable => ex.close() }
       case Denied(code, m) =>
         try respond(ex, code,
@@ -1658,19 +1664,20 @@ object HttpRecordsServer {
     // session handlers (they must never drift on 416/resume
     // semantics): seq is literal, tail_offset is tail-relative
     // (clamped at 0), timestamp probes the engine for the first
-    // visible record at/after ts (a count=1 limited read), falling
-    // back to the tail when nothing is at/after it yet.
+    // visible record at/after ts (a count=1 readBatch, served on the
+    // driver like every other serving read), falling back to the tail
+    // when nothing is at/after it yet.
     def resolveStartSeq(basin: String, stream: String, from: ReadFrom,
                         cipher: Option[Array[Byte]]): Long = from match {
       case ReadFrom.SeqNum(n) => n
       case ReadFrom.TailOffset(k) =>
         math.max(store.checkTail(basin, stream).seqNum - k, 0L)
       case ReadFrom.Timestamp(ts) =>
-        store.read(basin, stream,
+        store.readBatch(basin, stream,
           ReadSpec(ReadStart(ReadFrom.Timestamp(ts), clamp = true),
             ReadEnd(ReadLimit(count = Some(1)))), cipher = cipher)
           .toOption
-          .flatMap(df => df.collect().headOption.map(_.getLong(0)))
+          .flatMap(_.headOption.map(_.seqNum))
           .getOrElse(store.checkTail(basin, stream).seqNum)
     }
 
@@ -1770,7 +1777,7 @@ object HttpRecordsServer {
         if (looping) Thread.sleep(10)
       } catch {
         // wrong key (right length, wrong bytes): AEAD auth failure
-        // inside the decrypt plan → 400 decryption_failed
+        // in the record decrypt → 400 decryption_failed
         case t: Throwable if decryptionFailure(t) =>
           respond(ex, 400, DecryptionFailedBody.getBytes(UTF_8))
           return

@@ -66,8 +66,11 @@ final case class CipherSpec(algo: CipherAlgo, key: Array[Byte]) {
   * plaintext, cipher without key is an error
   * (encryption.rs EncryptionSpec::resolve, common/src/encryption.rs:113-131).
   *
-  * Read-side decryption stays a codegen'd plan column
-  * ([[graft.functions.RecordDecryptExpr]]) — never a driver loop.
+  * Read-side decryption has one per-record function
+  * ([[EnvelopeCodec.decryptRecord]]) behind two executors: a codegen'd
+  * plan column ([[graft.functions.RecordDecryptExpr]]) for DataFrame
+  * reads, and the driver-side record scan of StreamStore.readBatch for
+  * serving reads.
   */
 object RecordCipher {
 
@@ -184,8 +187,8 @@ object RecordCipher {
 
   /** Decrypt one record, dispatching on the leading format byte.
     * Throws on unknown format, short input, or tag mismatch — exactly
-    * like the JCE AEADBadTagException path, so plan-level decryption
-    * surfaces auth failure as a task error, never silent garbage.
+    * like the JCE AEADBadTagException path, so auth failure surfaces as
+    * an error (a task error in a plan), never silent garbage.
     * Static-shaped so generated code can call it directly.
     */
   def decrypt(key: Array[Byte], aadBytes: Array[Byte],

@@ -46,6 +46,21 @@ final class ManifestCasConflict(msg: String)
 
 object StreamStore {
 
+  /** One planned read (StreamStore.planRead): the chosen data files
+    * (disjoint, each seq-sorted, in `minSeq` order) and the row masks
+    * both executors apply — seq in [lo, hi), timestamp ≥ `retCutoff`
+    * (Age retention) and < `until`, commands dropped when
+    * `ignoreCommands` — plus the `count` cut and the resolved cipher.
+    */
+  private[log] final case class ReadPlan(
+      files: Seq[FileIndex.FileStats], lo: Long, hi: Long,
+      retCutoff: Option[Long], until: Option[Long], ignoreCommands: Boolean,
+      count: Option[Long], cipher: Option[CipherSpec])
+
+  /** Columns the driver-side record scan reads (metered_size is not
+    * part of a served record). */
+  private val RecordColumns = Set("seq_num", "timestamp", "headers", "body")
+
   /** One staged file written by a SUCCESSFUL task attempt, reported
     * back to the driver through the job's own result channel — the
     * committer-free equivalent of a task-commit message. The
@@ -1491,27 +1506,22 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     last
   }
 
-  /** R2-R5 + R10 (+ A13 read-side): plan a read as a DataFrame over an
-    * explicitly pruned file list. Returns Left on an unsatisfiable
-    * start position (start beyond tail without clamp), mirroring
-    * RANGE_NOT_SATISFIABLE (read.rs:246-285).
+  /** R2-R5 + R10 (+ A13 read-side): the ONE read planner behind both
+    * read executors — [[read]] (a DataFrame) and [[readBatch]] (a
+    * driver-side scan). Returns Left on an unsatisfiable start position
+    * (start beyond tail without clamp), mirroring RANGE_NOT_SATISFIABLE
+    * (read.rs:246-285).
     *
-    * Scale shape: start/limits/until are resolved to a [lo, hiCut) seq
+    * Scale shape: start/limits/until are resolved to a [lo, hi) seq
     * interval on the driver from parquet footer stats (+ cached sums),
-    * then ONLY budget-overlapping files enter the plan — a bytes-limited
+    * then ONLY budget-overlapping files are chosen — a bytes-limited
     * read from seq 0 of a 10 TB stream scans ~budget bytes, not 10 TB.
-    * No window function anywhere in the plan.
-    *
-    * The final orderBy is a sort of the BOUNDED result (limited reads
-    * are ≤ budget by construction). For an unbounded ordered catch-up
-    * of a huge range, use the streaming source (Follow /
-    * GraftStreamSource): it delivers seq-ordered batches from the
-    * sorted, disjoint files directly — no sort, no shuffle.
+    * The chosen files are disjoint and each is sorted by seq_num, so in
+    * `minSeq` order they yield the result already in seq order.
     */
-  def read(basin: String, stream: String, spec: ReadSpec,
-           ignoreCommands: Boolean = false,
-           nowMs: Option[Long] = None,
-           cipher: Option[Array[Byte]] = None): Either[String, DataFrame] = {
+  private def planRead(basin: String, stream: String, spec: ReadSpec,
+                       ignoreCommands: Boolean, nowMs: Option[Long],
+                       cipher: Option[Array[Byte]]): Either[String, StreamStore.ReadPlan] = {
     // C6 (core.rs:326-391): reading a missing stream fails unless the
     // basin opts into create_stream_on_read
     val basinCfg = catalog.basinConfig(basin)
@@ -1587,55 +1597,105 @@ final class StreamStore(val spark: SparkSession, val root: String) {
       st.maxSeq >= lo && st.minSeq < hiCut &&
         spec.end.until.forall(u => st.minTs < u) &&
         retCutoff.forall(rc => st.maxTs >= rc))
-    var df =
-      if (chosen.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], recordSchema)
-      else spark.read.schema(recordSchema).parquet(chosen.map(_.path): _*)
-    df = df.where(col("seq_num") >= lo && col("seq_num") < hiCut)
-    retCutoff.foreach(rc => df = df.where(col("timestamp") >= rc))
-    spec.end.until.foreach(u => df = df.where(col("timestamp") < u))
-    if (ignoreCommands)
-      // NULL headers = an encrypted data envelope (never a command —
-      // commands are stored plaintext, encryption.rs:211-213); the
-      // null-safe guard keeps those rows
-      df = df.where(col("headers").isNull || !(size(col("headers")) === 1 &&
-        octet_length(col("headers")(0)("name")) === 0))
-    var out = df.orderBy("seq_num")
-    // the budget walk above already bounds rows; clamp so a count above
-    // 2^31 can't overflow into a negative limit
-    spec.end.limit.count.foreach(c =>
-      out = out.limit(math.min(c, Int.MaxValue.toLong).toInt))
-    // A13 read-side decryption as a codegen'd plan expression (the
-    // reference decrypts in the session loop, read.rs:74-91; the Spark
-    // analog is record_decrypt inside the plan — per-record format-byte
-    // dispatch across both ciphers — never a driver loop): restores the
-    // logical (headers, body) from the sealed envelope encoding.
-    // Applied ABOVE the sort + count limit deliberately: the sort's
-    // range exchange SAMPLES its child to pick partition bounds, so a
-    // decrypt below it would run the cipher twice per record (pinned
-    // in RecordDecryptPlanSpec), and a count-limited read should only
-    // pay the cipher for rows that survive the limit.
-    cipherSpec.foreach { s =>
-      out = RecordCipher.decryptRecords(out, s.key, basin, stream)
-    }
-    Right(out)
+    Right(StreamStore.ReadPlan(chosen, lo, hiCut, retCutoff,
+      spec.end.until, ignoreCommands, spec.end.limit.count, cipherSpec))
   }
 
-  /** Collect a read as model objects (serving-edge helper, ≤1 batch).
-    * Decryption happens inside the plan (see read()), never on the
-    * driver.
+  /** A planned read as a DataFrame over the plan's file list, for
+    * DataFrame callers (queries and demos). Serving reads use
+    * [[readBatch]], which runs the same plan without a Spark job.
+    *
+    * The final orderBy is a sort of the BOUNDED result (limited reads
+    * are ≤ budget by construction). For an unbounded ordered catch-up
+    * of a huge range, use the streaming source (Follow /
+    * GraftStreamSource): it delivers seq-ordered batches from the
+    * sorted, disjoint files directly — no sort, no shuffle.
+    */
+  def read(basin: String, stream: String, spec: ReadSpec,
+           ignoreCommands: Boolean = false,
+           nowMs: Option[Long] = None,
+           cipher: Option[Array[Byte]] = None): Either[String, DataFrame] =
+    planRead(basin, stream, spec, ignoreCommands, nowMs, cipher).map { p =>
+      var df =
+        if (p.files.isEmpty)
+          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], recordSchema)
+        else spark.read.schema(recordSchema).parquet(p.files.map(_.path): _*)
+      df = df.where(col("seq_num") >= p.lo && col("seq_num") < p.hi)
+      p.retCutoff.foreach(rc => df = df.where(col("timestamp") >= rc))
+      p.until.foreach(u => df = df.where(col("timestamp") < u))
+      if (p.ignoreCommands)
+        // NULL headers = an encrypted data envelope (never a command —
+        // commands are stored plaintext, encryption.rs:211-213); the
+        // null-safe guard keeps those rows
+        df = df.where(col("headers").isNull || !(size(col("headers")) === 1 &&
+          octet_length(col("headers")(0)("name")) === 0))
+      var out = df.orderBy("seq_num")
+      // the budget walk above already bounds rows; clamp so a count above
+      // 2^31 can't overflow into a negative limit
+      p.count.foreach(c =>
+        out = out.limit(math.min(c, Int.MaxValue.toLong).toInt))
+      // A13 read-side decryption as a codegen'd plan expression
+      // (record_decrypt — per-record format-byte dispatch across both
+      // ciphers; the reference decrypts in the session loop,
+      // read.rs:74-91): restores the logical (headers, body) from the
+      // sealed envelope encoding. Applied ABOVE the sort + count limit
+      // deliberately: the sort's range exchange SAMPLES its child to
+      // pick partition bounds, so a decrypt below it would run the
+      // cipher twice per record (pinned in RecordDecryptPlanSpec), and
+      // a count-limited read should only pay the cipher for rows that
+      // survive the limit.
+      p.cipher.foreach { s =>
+        out = RecordCipher.decryptRecords(out, s.key, basin, stream)
+      }
+      out
+    }
+
+  /** Serve a planned read as model objects, scanned on the driver — no
+    * Spark job. Every serving read (unary, SSE, S2S, ReadSession,
+    * readChunked) lands here: a 10-record point read is a few file
+    * opens, not a scheduled job. The plan is [[read]]'s, and so are the
+    * row masks, the order (the chosen files in `minSeq` order — they
+    * are disjoint and seq-sorted, so nothing is sorted) and the count
+    * cut. Encrypted data rows are decrypted here, one record at a time,
+    * by the same function the record_decrypt plan expression calls
+    * (EnvelopeCodec.decryptRecord), and only for rows that are
+    * returned. A wrong key throws AEADBadTagException.
     */
   def readBatch(basin: String, stream: String, spec: ReadSpec,
                 ignoreCommands: Boolean = false,
-                cipher: Option[Array[Byte]] = None): Either[String, Seq[SequencedRecord]] =
-    read(basin, stream, spec, ignoreCommands, None, cipher).map { df =>
-      df.collect().toSeq.map { r =>
-        SequencedRecord(
-          StreamPosition(r.getLong(0), r.getLong(1)),
-          Option(r.getSeq[Row](2)).getOrElse(Seq.empty)
-            .map(h => Header(h.getAs[Array[Byte]](0), h.getAs[Array[Byte]](1))),
-          r.getAs[Array[Byte]](3))
+                cipher: Option[Array[Byte]] = None,
+                nowMs: Option[Long] = None): Either[String, Seq[SequencedRecord]] =
+    planRead(basin, stream, spec, ignoreCommands, nowMs, cipher).map { p =>
+      val out = Vector.newBuilder[SequencedRecord]
+      var left = p.count.getOrElse(Long.MaxValue)
+      val key = p.cipher.map(_.key).orNull
+      val aad = if (key == null) null else RecordCipher.aad(basin, stream)
+      val files = p.files.iterator
+      while (left > 0 && files.hasNext) {
+        FileIndex.scanGroups(files.next().path, StreamStore.RecordColumns) { g =>
+          val seq = g.getLong("seq_num", 0)
+          // seq-sorted file: past the cut, nothing later is in range
+          seq < p.hi && {
+            val ts = g.getLong("timestamp", 0)
+            if (seq >= p.lo && p.retCutoff.forall(ts >= _) &&
+                p.until.forall(ts < _) &&
+                !(p.ignoreCommands && FileIndex.isCommand(g))) {
+              val stored = FileIndex.headers(g)
+              val body = FileIndex.body(g)
+              val (headers, plain) =
+                // stored NULL headers = a sealed data envelope
+                if (key != null && stored == null && body != null)
+                  EnvelopeCodec.decryptRecord(key, aad, body)
+                else (if (stored == null) Nil else stored.toSeq, body)
+              out += SequencedRecord(StreamPosition(seq, ts),
+                headers.map { case (n, v) => Header(n, v) }, plain)
+              left -= 1
+            }
+            left > 0
+          }
+        }
       }
+      out.result()
     }
 
   /** R7 — unary read: like readBatch but with the one-batch caps

@@ -3,10 +3,6 @@ package graft.streaming.source
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.example.GroupReadSupport
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -415,50 +411,37 @@ final class GraftReaderFactory extends PartitionReaderFactory {
     new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition])
 }
 
-/** Executor-side reader: parquet-mr Group API -> InternalRow, filtered
-  * to the [lo, endSeq) offset range and the plan-time retention cutoff.
+/** Executor-side reader: FileIndex's shared parquet opener and Group
+  * decoder -> InternalRow, filtered to the [lo, endSeq) offset range
+  * and the plan-time retention cutoff.
   */
 final class GraftPartitionReader(part: GraftInputPartition)
     extends PartitionReader[InternalRow] {
 
-  private val reader = org.apache.parquet.hadoop.ParquetReader
-    .builder(new GroupReadSupport(), new Path(part.path))
-    .withConf(new Configuration())
-    .build()
+  private val rows = FileIndex.cursor(part.path)
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    var g = reader.read()
+    var g = rows.next()
     while (g != null) {
       val seq = g.getLong("seq_num", 0)
       val ts = g.getLong("timestamp", 0)
       if (seq >= part.lo && seq < part.endSeq && ts >= part.retCutoff) {
-        val headers =
-          if (g.getFieldRepetitionCount("headers") == 0) null
-          else {
-            val hg = g.getGroup("headers", 0)
-            val n = hg.getFieldRepetitionCount("list")
-            new GenericArrayData((0 until n).map { i =>
-              val el = hg.getGroup("list", i).getGroup("element", 0)
-              val name = if (el.getFieldRepetitionCount("name") > 0)
-                el.getBinary("name", 0).getBytes else null
-              val value = if (el.getFieldRepetitionCount("value") > 0)
-                el.getBinary("value", 0).getBytes else null
-              new GenericInternalRow(Array[Any](name, value)): Any
-            }.toArray)
-          }
-        val body = if (g.getFieldRepetitionCount("body") > 0)
-          g.getBinary("body", 0).getBytes else null
+        val headers = FileIndex.headers(g) match {
+          case null => null
+          case hs => new GenericArrayData(hs.map { case (n, v) =>
+            new GenericInternalRow(Array[Any](n, v)): Any })
+        }
         current = new GenericInternalRow(Array[Any](
-          seq, ts, headers, body,
+          seq, ts, headers, FileIndex.body(g),
           g.getLong("metered_size", 0)))
         return true
       }
-      g = reader.read()
+      g = rows.next()
     }
     false
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
+  override def close(): Unit = rows.close()
 }

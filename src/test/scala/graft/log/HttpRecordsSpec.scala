@@ -229,6 +229,42 @@ class HttpRecordsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally server.stop(0)
   }
 
+  test("WRONG key on the driver-served read paths: an SSE session ends " +
+    "with an in-band decryption_failed error, and a timestamp start " +
+    "(which decrypts its probe record) answers 400 decryption_failed " +
+    "before any stream opens") {
+    val (_, server, ep) = served(Some(CipherAlgo.Aes256Gcm))
+    try {
+      val rightHdr = hdr :+ ("s2-encryption-key" ->
+        Base64.getEncoder.encodeToString(Array.fill(32)(0x42.toByte)))
+      val wrongKey = "s2-encryption-key" ->
+        Base64.getEncoder.encodeToString(Array.fill(32)(0x24.toByte))
+      val wrongHdr = hdr :+ wrongKey
+      request("POST", s"$ep/v1/streams/s/records", rightHdr,
+        """{"records":[{"body":"secret"}]}""".getBytes("UTF-8"))
+      val evs = HttpRecordsClient.readSse(
+        s"$ep/v1/streams/s/records?seq_num=0&count=1", wrongHdr)
+      assert(evs.nonEmpty && evs.last.event.contains("error") &&
+        evs.last.data.contains("\"decryption_failed\""),
+        evs.map(e => (e.event, e.data)).mkString("|"))
+      // the right key still reads through the same path
+      assert(HttpRecordsClient.readSse(
+        s"$ep/v1/streams/s/records?seq_num=0&count=1", rightHdr)
+        .exists(_.data.contains(""""body":"secret"""")))
+      // timestamp starts: unary, SSE and S2S all answer 400 up front
+      Seq(hdr, hdr :+ ("Accept" -> "text/event-stream"),
+          hdr :+ ("Content-Type" -> S2sCodec.ProtoContentType))
+        .foreach { h =>
+          val (c, b, _) = HttpRecordsClient.requestBinary("GET",
+            s"$ep/v1/streams/s/records?timestamp=0&count=1",
+            h :+ wrongKey)
+          val body = new String(b, "UTF-8")
+          assert(c == 400 && body.contains("\"decryption_failed\""),
+            s"${h.last}: $c $body")
+        }
+    } finally server.stop(0)
+  }
+
   test("long-poll unary read: wait blocks until a record lands, then " +
     "returns it (MAX_UNARY_READ_WAIT long-poll, records.rs:78-81)") {
     val (st, server, ep) = served()

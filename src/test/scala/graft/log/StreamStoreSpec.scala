@@ -1042,7 +1042,8 @@ class StreamStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.queryExecution.analyzed.toString.toLowerCase
       .replace("_", "").contains("recorddecrypt"))
     assert(new String(df.collect().head.getAs[Array[Byte]]("body")) == "top-secret")
-    // readBatch routes through the same plan
+    // readBatch runs the same read plan on the driver and decrypts with
+    // the function record_decrypt calls
     val rec = st.readBatch("encplan-basin", "encplan",
       ReadSpec(ReadStart(ReadFrom.SeqNum(0))), cipher = Some(key)).toOption.get.head
     assert(new String(rec.body) == "top-secret")
